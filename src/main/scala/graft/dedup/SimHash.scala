@@ -31,8 +31,8 @@ import graft.functions.Portable
   * N²/2 × 4.5e-13 — ~0.06 pairs at the same N, gone for any corpus the
   * banding itself can hold. The hamming threshold re-derivation is
   * proportional (2/30 → 4/60 — the same per-bit noise fraction; the
-  * `Probe simham` histogram shows the population is smooth, so the
-  * fraction, not an absolute gap, is the invariant); bands follow
+  * measured all-pairs hamming histogram is smooth, so the fraction,
+  * not an absolute gap, is the invariant); bands follow
   * pigeonhole: 5 bands of 12 bits catch every pair with hamming ≤ 4.
   */
 object SimHash {

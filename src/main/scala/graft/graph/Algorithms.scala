@@ -69,7 +69,7 @@ final class PersonalizedPageRank(nSeeds: Long, isSeed: Column,
 }
 final case class PageRankRun(graph: PropertyGraph, program: VertexProgram) {
   def fixed(iterations: Int): DataFrame =
-    GmrRunner.runFixed(graph, program, iterations).select("id", "value")
+    GmrRunner.runFixed(graph, program, iterations).vertices.select("id", "value")
   def converged(): GmrRunner.RunResult = GmrRunner.run(graph, program)
 }
 
@@ -119,69 +119,68 @@ object ConnectedComponentsProgram extends VertexProgram {
 /** Non-iterative whole-graph operators. */
 object GraphOps {
 
-  /** Broadcast budget for iterative-loop VERTEX STATE frames (r21, guide
-    * §3.1) — the adjacencyBroadcastBytes discipline applied to the BSP
-    * family: one deliberate bounded broadcast per superstep replaces the
-    * state-side exchange AND the per-superstep sort-merge sorts of both
-    * join sides (the superstep then has exactly one exchange — the
-    * message groupBy — which is the first-principles minimum for BSP).
-    * Estimated at a conservative 64 B per state row (id + value + delta
-    * + a static column or two, plus row overhead); 256 MB ≈ 4M vertices,
-    * routine executor memory on a real cluster. Larger vertex sets fall
-    * back to the pre-r21 shuffle-join shape automatically, so the knob
-    * is a latency optimization, never a correctness or OOM hazard. Set
-    * to 0 to force the shuffle shape (the A/B instrument the
-    * before/after plans in plans/r21/ were captured with). */
+  /** Broadcast budget for iterative-loop state frames, read by
+    * [[stateLoop]]. Estimated at a conservative 64 B per state row (id +
+    * value + delta + a static column or two, plus row overhead); 256 MB ≈
+    * 4M vertices, routine executor memory on a real cluster. Larger
+    * states take the shuffle-join shape, so the knob is a latency
+    * optimization, never a correctness or OOM hazard. `0` forces the
+    * shuffle shape. */
   val StateBroadcastBytesKey = "spark.graft.stateBroadcastBytes"
-  val StateBroadcastBytesDefault: Long = 256L << 20
-  val StateBytesPerRow = 64L
+  private val StateBroadcastBytesDefault: Long = 256L << 20
+  private val StateBytesPerRow = 64L
 
-  /** Does an O(V) state frame of `rows` rows fit the state-broadcast
-    * budget? Shared by every iterative loop in the engine (GmrRunner,
-    * LPA, Luby MIS, k-core/k-truss peeling, multi-source BFS, Borůvka,
-    * SCC, semi-naive reachability, Lloyd assignment). */
-  def stateBroadcastFits(spark: org.apache.spark.sql.SparkSession,
-                         rows: Long): Boolean = {
+  private def stateBroadcastFits(spark: org.apache.spark.sql.SparkSession,
+                                 rows: Long): Boolean = {
     val budget = spark.conf.getOption(StateBroadcastBytesKey).map(_.toLong)
       .getOrElse(StateBroadcastBytesDefault)
     budget > 0 && rows * StateBytesPerRow <= budget
   }
 
-  /** [[stateBroadcastFits]] as a hint: `df` marked for broadcast when its
-    * O(V)/O(frontier) row count fits the budget, unchanged otherwise. */
-  def broadcastIfFits(df: DataFrame, rows: Long): DataFrame =
-    if (stateBroadcastFits(df.sparkSession, rows)) broadcast(df) else df
+  /** The join shape [[stateLoop]] chose for one loop: `broadcast` when
+    * the loop's state fits the budget, and `hint` to mark a state-sized
+    * frame for a broadcast join in that shape (identity otherwise). */
+  final class LoopShape private[GraphOps] (val broadcast: Boolean) {
+    def hint(df: DataFrame): DataFrame =
+      if (broadcast) org.apache.spark.sql.functions.broadcast(df) else df
+  }
 
-  /** r22: per-round AQE replanning latency in BROADCAST-FIT loops.
+  /** The loop policy shared by every iterative operator in the engine
+    * (GmrRunner, LPA, Luby MIS, k-core/k-truss peeling, SCC, Borůvka
+    * MST, multi-source BFS, Brandes δ, HITS).
     *
-    * When a loop's state fits the broadcast budget, every per-round join
-    * is hint-pinned to a broadcast build of a dimension-sized frame and
-    * the round's only exchange is a map-combinable aggregate whose
-    * reduce input is dimension-sized — there is nothing left for AQE to
-    * re-decide (no join-strategy switches, no skew to split: no
-    * sort-merge join exists in these plans), but each materialized round
-    * still pays AQE's stage-by-stage re-optimization round trips.
-    * Measured at sf0.1 (Probe ab, warm pairs): g1 2.42/2.57 AQE-off vs
-    * 2.94/3.19 on; g27 3.10/3.45 vs 3.41/3.85 — 10-20% of whole-query
-    * time, pure driver latency. So broadcast-fit loop bodies run with
-    * AQE disabled, RESTORING the previous value afterwards (and on
-    * failure). This is deliberately NOT a blanket/local-mode tune:
-    * beyond the budget the loops keep the AQE shuffle shape with skew
-    * splitting and partition coalescing fully active, and everything
-    * outside loop bodies (scans, one-shot joins, finish assemblies)
-    * keeps AQE unconditionally. `spark.graft.loopAqeOff=false` is the
-    * kill switch / A/B instrument. */
-  val LoopAqeOffKey = "spark.graft.loopAqeOff"
-  def withLoopAqe[T](spark: org.apache.spark.sql.SparkSession,
-                     disable: Boolean)(f: => T): T = {
-    val enabled = disable &&
-      spark.conf.getOption(LoopAqeOffKey).forall(_.toBoolean)
-    if (!enabled) f
+    * `rowBound` bounds the rows of every per-round state frame (O(V)
+    * state, a shrinking survivor set, or an O(|srcs|·V) level table).
+    * When it fits the state-broadcast budget, the body hints those
+    * frames for broadcast: each per-round join against the cached O(E)
+    * edge frame or another state frame becomes a broadcast hash join,
+    * so a round's only exchanges are its aggregates and there are no
+    * sorts. Measured ×3-7 faster per GmrRunner superstep at sf0.1
+    * (A-B-A-B). Without the hints, checkpointed frames carry inflated
+    * size estimates and every round plans sort-merge joins that
+    * exchange and sort both sides. Beyond the budget the body runs the
+    * shuffle-join shape; results are identical either way.
+    *
+    * In the broadcast shape the body also runs with AQE off, restoring
+    * the previous value afterwards, on failure too. Every join there is
+    * hint-pinned and every exchange is dimension-sized, so AQE has
+    * nothing to re-decide, but each materialized round still pays its
+    * stage-by-stage replanning. Measured at sf0.1 (warm pairs): g1
+    * 2.42/2.57 s AQE-off vs 2.94/3.19 s on, g27 3.10/3.45 vs 3.41/3.85 —
+    * 10-20% of whole-query time. On graftbench at local[4], AQE on inside
+    * loops was slower in 10 of 10 pairs (bsp-dense run_s 2.28 → 2.61 s,
+    * bsp-frontier 1.95 → 2.11 s). Beyond the budget AQE stays on for
+    * skew splitting and partition coalescing, and everything outside
+    * loop bodies keeps AQE unconditionally. */
+  def stateLoop[T](spark: org.apache.spark.sql.SparkSession, rowBound: Long)(
+      body: LoopShape => T): T = {
+    val shape = new LoopShape(stateBroadcastFits(spark, rowBound))
+    if (!shape.broadcast) body(shape)
     else {
       val key = "spark.sql.adaptive.enabled"
       val prev = spark.conf.get(key)
       spark.conf.set(key, "false")
-      try f finally spark.conf.set(key, prev)
+      try body(shape) finally spark.conf.set(key, prev)
     }
   }
 
@@ -210,16 +209,11 @@ object GraphOps {
     var state = vertices
       .select(col("id"), lit("a").as("st"), lit(-1L).as("round_joined"))
       .materialize()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): every
-    // per-round frame here — priorities, winners, knockouts — is bounded
-    // by the (shrinking) active vertex set, so when V fits the
-    // state-broadcast budget all five per-round joins become broadcast
-    // joins against the cached edge frame / the O(V) state, leaving the
-    // max-neighbor groupBy and the knockout distinct as the round's only
-    // exchanges. Shuffle shape beyond the budget, results identical.
-    val fits = stateBroadcastFits(edges.sparkSession, state.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    withLoopAqe(edges.sparkSession, fits) {
+    // Priorities, winners and knockouts are all bounded by the active
+    // vertex set: the max-neighbor groupBy and the knockout distinct are
+    // a broadcast-shape round's only exchanges.
+    stateLoop(edges.sparkSession, state.count()) { shape =>
+    import shape.hint
     for (r <- 1 to rounds) {
       val pri = state.where(col("st") === "a")
         .select(col("id"),
@@ -267,16 +261,11 @@ object GraphOps {
     val e2 = symEdges.select("src", "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val s0 = e2.select(col("src").as("id")).distinct().materialize()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-    // survivor set is O(V) and only shrinks — when V fits the
-    // state-broadcast budget both per-round semi-filters broadcast it and
-    // the cached edge frame streams map-side, leaving the degree groupBy
-    // as the round's only exchange. Shuffle shape beyond the budget.
-    val fits = stateBroadcastFits(e2.sparkSession, s0.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
     var surv = s0
     val snapshots = Seq.newBuilder[DataFrame]
-    withLoopAqe(e2.sparkSession, fits) {
+    // The survivor set is O(V) and only shrinks.
+    stateLoop(e2.sparkSession, s0.count()) { shape =>
+    import shape.hint
     for (_ <- 1 to rounds) {
       val deg = e2
         .join(hint(surv.select(col("id").as("src"))), "src")
@@ -318,20 +307,11 @@ object GraphOps {
     require(k >= 3, s"kTruss is defined for k >= 3 (k=$k is the whole graph)")
     val e0 = canonEdges.select("src", "dst").materialize()
     var e = e0
-    // r22 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-    // edge frame is O(E) and only shrinks — when it fits the
-    // state-broadcast budget every per-round join (both wedge joins, the
-    // closing-edge join, the support filter join) hints the broadcast
-    // side, leaving the support groupBy as the round's only exchange.
-    // Pre-r22 each round planned checkpointed frames with default size
-    // stats, so the 3-way triangle join re-planned as sort-merge with
-    // fresh exchanges+sorts every cascade round. Shuffle shape beyond
-    // the budget, identical results (the gate bounds on the INITIAL
-    // edge count — an upper bound for every later round).
-    val fits = stateBroadcastFits(e0.sparkSession, e0.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
     val snapshots = Seq.newBuilder[DataFrame]
-    withLoopAqe(e0.sparkSession, fits) {
+    // The state here is the surviving edge set itself: the initial edge
+    // count bounds every round.
+    stateLoop(e0.sparkSession, e0.count()) { shape =>
+    import shape.hint
     for (_ <- 1 to rounds) {
       val tri = e.as("ab").join(hint(e.as("bc")), col("ab.dst") === col("bc.src"))
         .join(hint(e.as("ac")),
@@ -665,18 +645,10 @@ object GraphOps {
     var labels = g.vertices.select(col("id"), col("id").as("label"))
     val frontierOn = edges.sparkSession.conf
       .getOption(LpaFrontierKey).forall(_.toBoolean)
-    // Full-round cutoff denominator AND the r21 broadcast-budget gate's
-    // row bound; one O(V) count over the (small, usually parquet-backed)
-    // vertex frame.
+    // Full-round cutoff denominator AND the loop's state row bound (labels
+    // and pick are O(V)); one O(V) count over the (small, usually
+    // parquet-backed) vertex frame.
     val nVerts = g.vertices.count()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): labels
-    // and pick are O(V) — when V fits the state-broadcast budget the vote
-    // join broadcasts the label side (the edge view streams map-side with
-    // no exchange) and the update/diff joins broadcast the pick side,
-    // leaving the two vote aggregates as the round's only exchanges.
-    // Shuffle shape beyond the budget, bit-identical labels either way.
-    val bcFits = stateBroadcastFits(edges.sparkSession, nVerts)
-    def hint(df: DataFrame): DataFrame = if (bcFits) broadcast(df) else df
     // None = recompute every vertex this round.
     var frontier: Option[(DataFrame, Long)] = None
     // Next full-mode round whose changed set we pay to measure, and the
@@ -684,7 +656,8 @@ object GraphOps {
     var nextCheck = 2
     var checkStep = 2
     var fixed = false
-    withLoopAqe(edges.sparkSession, bcFits) {
+    stateLoop(edges.sparkSession, nVerts) { shape =>
+    import shape.hint
     for (i <- 1 to iters if !fixed) {
       val active = frontier match {
         case None => edges
@@ -728,11 +701,6 @@ object GraphOps {
           .select(col("n.id").as("id"))
           .materialize()
         val n = changed.count()
-        if (edges.sparkSession.conf.getOption("spark.graft.lpa.debug")
-            .exists(_.toBoolean))
-          println(s"[lpa] round $i changed=$n of $nVerts" +
-            s" (next round ${if (n == 0) "fixpoint"
-              else if (2 * n >= nVerts) "full" else "frontier"})")
         if (n == 0) fixed = true
         val wasFrontier = frontier.isDefined
         frontier = if (2 * n >= nVerts) None else Some((changed, n))

@@ -3,6 +3,7 @@ package graft.graph
 import graft.graph.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** A vertex-centric program: the Spark-native form of the reference's
   * extension API (subclass `GMR` with `initGraph`/`map`/`sort`/`reduce`/
@@ -75,19 +76,21 @@ trait VertexProgram {
   * aggregate that also materializes the superstep.
   *
   * Scale notes (100 TB design):
-  *  - callers should persist `edges` (it is re-joined every superstep);
-  *    [[run]] repartitions it once by `src` so the per-superstep join
-  *    co-locates without re-shuffling the static side.
-  *  - vertex state is checkpointed ([[Materialize]]) every
-  *    `checkpointInterval` supersteps to truncate lineage — unbounded
-  *    lineage is the classic iterative-Spark failure mode. The
-  *    durability mode is session conf: default `localCheckpoint`
-  *    (right for local[*]), `spark.graft.checkpoint.reliable=true`
-  *    switches every loop in the engine to reliable `checkpoint()`
-  *    against a checkpoint dir so executor loss cannot kill a
-  *    long-running BSP job at cluster scale.
-  *  - convergence mode runs one action per superstep (inherent: BSP);
-  *    fixed-iteration mode runs one action per checkpoint interval only.
+  *  - `edges` is re-joined every superstep, so [[run]] caches it for
+  *    the run unless the caller already has, and releases only what it
+  *    cached itself. In the shuffle shape it partitions `edges` once by
+  *    `src` so the per-superstep join co-locates without re-shuffling
+  *    the static side.
+  *  - vertex state is checkpointed ([[Materialize]]) every superstep to
+  *    truncate lineage — unbounded lineage is the classic iterative-Spark
+  *    failure mode. The durability mode is session conf: default
+  *    `localCheckpoint` (right for local[*]),
+  *    `spark.graft.checkpoint.reliable=true` switches every loop in the
+  *    engine to reliable `checkpoint()` against a checkpoint dir so
+  *    executor loss cannot kill a long-running BSP job at cluster scale.
+  *  - convergence mode runs one `max(delta)` action per superstep
+  *    (inherent: BSP); fixed-iteration mode runs none, apart from the
+  *    empty-frontier check of frontier-pruned programs.
   */
 object GmrRunner {
 
@@ -102,26 +105,22 @@ object GmrRunner {
 
   /** Run to convergence (max-abs-delta < tolerance, `gmr.h:125`) or the
     * iteration cap. */
-  def run(graph: PropertyGraph, program: VertexProgram,
-          checkpointInterval: Int = 1): RunResult =
-    loop(graph, program, program.maxIterations, convergenceCheck = true, checkpointInterval)
+  def run(graph: PropertyGraph, program: VertexProgram): RunResult =
+    loop(graph, program, program.maxIterations, convergenceCheck = true)
 
   /** Run exactly `iterations` supersteps — deterministic mode for
     * oracle-checked queries (SURVEY.md §7.3 "fixed iteration counts").
+    * A frontier-pruned program whose frontier has emptied stops early:
+    * every remaining superstep would be an exact no-op.
     *
-    * checkpointInterval defaults to 1: each superstep references the
-    * previous vertex state twice (message join + update join), so a lazy
+    * Every superstep is materialized: each one references the previous
+    * vertex state twice (message join + update join), so a lazy
     * k-superstep plan is a ~2^k recompute tree — materializing the small
     * vertex state every superstep is far cheaper than ever evaluating
-    * that tree (measured 239s → seconds on the sf0.1 SSSP query). */
-  def runFixed(graph: PropertyGraph, program: VertexProgram, iterations: Int,
-               checkpointInterval: Int = 1): DataFrame =
-    loop(graph, program, iterations, convergenceCheck = false, checkpointInterval).vertices
-
-  /** [[runFixed]] keeping the per-superstep timings (builder-side
-    * instrumentation; `graft.Probe g1`). */
-  def loopTimed(graph: PropertyGraph, program: VertexProgram, iterations: Int): RunResult =
-    loop(graph, program, iterations, convergenceCheck = false, checkpointInterval = 1)
+    * that tree (measured 239s → seconds on the sf0.1 SSSP query; a
+    * checkpoint every 2nd superstep measured 15-20% slower). */
+  def runFixed(graph: PropertyGraph, program: VertexProgram, iterations: Int): RunResult =
+    loop(graph, program, iterations, convergenceCheck = false)
 
   /** [[runFixed]] with per-superstep residual recording — the
     * reference's per-iteration deviation report (`gmr.h:127-128`)
@@ -130,112 +129,74 @@ object GmrRunner {
     * paying the same one max(_delta) action convergence mode pays. */
   def runTraced(graph: PropertyGraph, program: VertexProgram,
                 iterations: Int): RunResult =
-    loop(graph, program, iterations, convergenceCheck = true,
-      checkpointInterval = 1, earlyStop = false)
+    loop(graph, program, iterations, convergenceCheck = true, earlyStop = false)
 
   private def loop(graph: PropertyGraph, program: VertexProgram, maxIter: Int,
-                   convergenceCheck: Boolean, checkpointInterval: Int,
-                   earlyStop: Boolean = true): RunResult = {
+                   convergenceCheck: Boolean, earlyStop: Boolean = true): RunResult = {
     val spark = graph.edges.sparkSession
-    val nShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // r22 A/B instrument (VERDICT r21 item 2): fixed-mode checkpoint
-    // cadence. The "cadence > 1 is slower" measurement predates the r21
-    // broadcast superstep shape, so it is re-measurable via conf without
-    // a code edit: each skipped checkpoint doubles the lazy recompute
-    // tree (state is referenced by both per-superstep joins), which is
-    // exactly the trade being priced. Convergence/traced modes always
-    // materialize per superstep (the consensus action needs it).
-    val cadence = spark.conf.getOption("spark.graft.checkpointCadence")
-      .map(_.toInt).filter(_ >= 1).getOrElse(checkpointInterval)
     // Break lineage into the (possibly self-referential) source plan so the
     // edges-derived vertex set can be re-joined against edges without
     // ambiguous-self-join resolution issues.
     var state = program.initial(graph.vertices)
       .withColumn("_delta", lit(Double.MaxValue)) // everything is frontier at iter 0
       .materialize()
-    // Superstep join strategy, decided ONCE per run from the materialized
-    // state's row count (a cheap cached-scan action — state is O(V) and
-    // just checkpointed). When the state fits the broadcast budget
-    // (guide §3.1: broadcast the side that fits), both per-superstep
-    // joins hint the O(V) side — the message join broadcasts the sender
-    // state against the O(E) edge frame and the update join broadcasts
-    // the aggregated messages — so the whole superstep has exactly ONE
-    // exchange (the message groupBy) and ZERO sorts, measured ×3-7
-    // faster per superstep at sf0.1 (Probe superstep, A-B-A-B). Without
-    // the hints the update join plans as a SortMergeJoin that exchanges
-    // + sorts the state and sorts the aggregate EVERY superstep.
-    // Beyond the budget (cluster-scale V) everything falls back to the
-    // pre-r21 shape: edges hash-partitioned by src once, shuffle joins.
-    val stateRows = state.count()
-    val bcastState = GraphOps.stateBroadcastFits(spark, stateRows)
-    // Kill switch for the r21 fixed-mode empty-frontier early exit below
-    // (the LPA-frontier-knob pattern): `false` forces every contracted
-    // superstep to run. Exists for the A/B instrument and as an
-    // operational escape hatch; results are bit-identical either way.
-    val fixedEarlyExit = spark.conf
-      .getOption("spark.graft.fixedEarlyExit").forall(_.toBoolean)
-    // Static side of every superstep join. Broadcast mode streams the
-    // cached frame map-side (partitioning is irrelevant to a broadcast
-    // join probe side — skipping the upfront repartition saves its
-    // one-off O(E) shuffle); shuffle mode partitions once by src so the
-    // per-superstep sort-merge join co-locates without re-shuffling the
-    // static side.
-    val edges = (if (bcastState) graph.edges
-                 else graph.edges.repartition(nShuffle, col("src")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val staticCols = state.columns
       .filterNot(c => c == "id" || c == "value" || c == "_delta")
-
     var iter = 0
     var lastDelta = Double.MaxValue
     var converged = false
     val timings = Seq.newBuilder[Double]
     val residuals = Seq.newBuilder[Double]
-    // r22: broadcast-fit supersteps skip AQE's per-round replanning
-    // (see GraphOps.withLoopAqe — hint-pinned plans, dimension-sized
-    // exchanges; AQE stays on for the shuffle fallback shape).
-    GraphOps.withLoopAqe(spark, bcastState) {
+    // In the broadcast shape both per-superstep joins hint the O(V) side —
+    // the sender state into the message join, the aggregated messages
+    // into the update join — so a superstep has exactly ONE exchange (the
+    // message groupBy) and ZERO sorts.
+    GraphOps.stateLoop(spark, state.count()) { shape =>
+    // Static side of every superstep join. The broadcast shape streams it
+    // map-side as is (partitioning is irrelevant to a broadcast join probe
+    // side); the shuffle shape partitions it once by src.
+    val edges =
+      if (shape.broadcast) graph.edges
+      else graph.edges.repartition(
+        spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
+    val ownCache = edges.storageLevel == StorageLevel.NONE
+    if (ownCache) edges.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
     while (iter < maxIter && !converged) {
       val tickStart = System.nanoTime()
       val senders = if (program.frontierOnly) state.where(col("_delta") > 0.0) else state
-      val msgs = program.messages(
-        if (bcastState) broadcast(senders) else senders, edges)
+      val msgs = program.messages(shape.hint(senders), edges)
       val agg = msgs.groupBy("id").agg(program.combiner.as("_agg"))
-      val stepped = state.join(
-          if (bcastState) broadcast(agg) else agg, Seq("id"), "left_outer")
+      val next = state.join(shape.hint(agg), Seq("id"), "left_outer")
         .select(
           col("id") +:
           program.updated(col("value"), col("_agg")).as("value") +:
           program.delta(col("value"), program.updated(col("value"), col("_agg"))).as("_delta") +:
           staticCols.map(col): _*)
+        .materialize()
       iter += 1
-      val checkpointNow = convergenceCheck || iter % cadence == 0 || iter == maxIter
-      val next = if (checkpointNow) stepped.materialize() else stepped
       if (convergenceCheck) {
         lastDelta = next.agg(max(col("_delta"))).first().getDouble(0)
         residuals += lastDelta
         converged = earlyStop && lastDelta < program.tolerance
-      } else if (earlyStop && fixedEarlyExit && program.frontierOnly &&
-          checkpointNow && iter < maxIter) {
-        // r21 (guide §1.2: don't compute what you throw away): in FIXED
-        // mode a frontier-pruned monotone program whose frontier has
-        // emptied can never change again — no senders means no messages,
-        // and updated(old, null) is absorbing (the same invariant
-        // frontierOnly already requires) — so every remaining superstep
-        // is an exact no-op that still pays the full per-superstep
-        // scheduler/checkpoint floor. Exit early: bit-identical result
-        // (the oracle's extra unrolled rounds are no-ops on its side
-        // too). One cheap isEmpty (take-1 over the just-checkpointed
-        // O(V) frame) per superstep buys back every no-op round — the
-        // dup-cluster quotient CCs converge in 2-3 hops of their 8
-        // contract rounds.
+      } else if (earlyStop && program.frontierOnly && iter < maxIter) {
+        // In FIXED mode a frontier-pruned monotone program whose frontier
+        // has emptied can never change again — no senders means no
+        // messages, and updated(old, null) is absorbing (the same
+        // invariant frontierOnly already requires) — so every remaining
+        // superstep is an exact no-op that still pays the full
+        // per-superstep scheduler/checkpoint floor. One cheap isEmpty
+        // (take-1 over the just-checkpointed O(V) frame) per superstep
+        // buys them back: the dup-cluster quotient CCs converge in 2-3
+        // hops of their 8 contract rounds. Bit-identical result (the
+        // oracle's extra unrolled rounds are no-ops on its side too).
         converged = next.where(col("_delta") > 0.0).isEmpty
       }
       state = next
       timings += (System.nanoTime() - tickStart) / 1e9
     }
+    } finally if (ownCache) edges.unpersist(blocking = false)
     }
-    edges.unpersist(blocking = false)
     RunResult(state.drop("_delta"), iter, lastDelta, timings.result(),
       residuals.result())
   }

@@ -42,12 +42,6 @@ object Mst {
     var comp = edges.select(col("src").as("id")).union(edges.select(col("dst").as("id")))
       .distinct().select(col("id"), col("id").as("comp"))
       .materialize()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-    // component-label frame is O(V) — when V fits the state-broadcast
-    // budget both labeling joins broadcast it and the persisted edge list
-    // streams map-side; beyond the budget the pre-r21 shuffle joins.
-    val fits = GraphOps.stateBroadcastFits(spark, comp.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
     var forest = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "weight")
     // Edges inside one component can never be picked again — merging only
     // grows components, so filtering on the current labels is sound and
@@ -55,9 +49,10 @@ object Mst {
     var liveEdges = edges
     var round = 0
     var done = false
-    // r22: broadcast-fit rounds skip AQE's per-round replanning (see
-    // GraphOps.withLoopAqe); the nested CC fallback manages its own.
-    GraphOps.withLoopAqe(spark, fits) {
+    // The component-label frame is O(V); the nested CC fallback opens
+    // its own scope.
+    GraphOps.stateLoop(spark, comp.count()) { shape =>
+    import shape.hint
     while (round < maxRounds && !done) {
       val labeled = liveEdges
         .join(hint(comp.select(col("id").as("src"), col("comp").as("csrc"))), "src")

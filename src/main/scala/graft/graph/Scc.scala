@@ -81,17 +81,10 @@ object Scc {
         result = result.union(localTarjan(verts, edgeArr).toSeq.toDF("id", "scc"))
         finished = true
       } else {
-      // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): the
-      // color and surviving-vertex frames are O(|active|) — the loop
-      // guard already paid the count, so the broadcast-budget gate is
-      // free. When they fit, the per-round labeling/filter joins
-      // broadcast them and the edge frame streams map-side; beyond the
-      // budget the pre-r21 shuffle joins. Results identical either way.
-      val fits = GraphOps.stateBroadcastFits(spark, nActive)
-      def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-      // r22: the round's own frames skip AQE replanning when broadcast-fit
-      // (GraphOps.withLoopAqe); the nested GmrRunner loops manage theirs.
-      GraphOps.withLoopAqe(spark, fits) {
+      // The color and surviving-vertex frames are O(|active|); the nested
+      // GmrRunner loops open their own scopes.
+      GraphOps.stateLoop(spark, nActive) { shape =>
+      import shape.hint
       val colors = GmrRunner.run(
           PropertyGraph(active, activeEdges.withColumn("weight", lit(1.0))),
           ConnectedComponentsProgram).vertices

@@ -446,9 +446,13 @@ object GraphLoaders {
         .select(lit(p.toLong).as("part"), split(trim(col("value")), " ").as("t"))
     }.reduce(_ union _)
       .where(size(col("t")) % 3 === 2) // data rows only; header is ≡ 1 (mod 3)
+      .withColumn("k", ((size(col("t")) - 2) / 3).cast("int")) // neighbor count
       .select(col("part"),
         element_at(col("t"), 1).cast("long").as("id"),
-        transform(sequence(lit(0), ((size(col("t")) - 2) / 3).cast("int") - 1), g => struct(
+        // Triple indices 0 until k. sequence(0, k - 1) would count DOWN
+        // to [0, -1] for an isolated vertex (k = 0); the first k of
+        // sequence(0, k) are empty there.
+        transform(slice(sequence(lit(0), col("k")), lit(1), col("k")), g => struct(
           element_at(col("t"), g * 3 + 3).cast("long").as("dst"),
           element_at(col("t"), g * 3 + 4).cast("int").as("dst_part"),
           element_at(col("t"), g * 3 + 5).cast("double").as("weight"))).as("ns"))

@@ -252,7 +252,7 @@ object DedupQueries {
     * fingerprint, hamming ≤ 4 (r10; was 3 × 10 / ≤ 2 over 30 bits — the
     * threshold re-derivation is proportional, 2/30 → 4/60, the same
     * per-bit noise fraction; see [[graft.dedup.SimHash]] for the floor
-    * math and `Probe simham` for the calibration histogram). maxHamming
+    * math and the calibration histogram). maxHamming
     * ≤ bands-1 is what makes the banding lossless (pigeonhole: ≤4
     * flipped bits can dirty at most 4 of the 5 slices). The wider
     * slices also SHRINK the candidate volume: chance band collisions
@@ -380,7 +380,7 @@ object DedupQueries {
             .select(col("id_a").as("src"), col("id_b").as("dst"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(pairs))
-          val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D6Iters)
+          val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D6Iters).vertices
             .select(col("id"), col("value").cast("long").as("comp"))
           try docs(s, d).select(col("id").as("doc_id"))
             .join(comp, col("doc_id") === col("id"), "left_outer")
@@ -574,7 +574,7 @@ object DedupQueries {
       .where(col("src") =!= col("dst"))
       .select("src", "dst").distinct()
     val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(qedges))
-    val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D6Iters)
+    val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D6Iters).vertices
       .select(col("id").as("rep"), col("value").cast("long").as("comp"))
     docs(s, d).select(col("id").as("doc_id"))
       .join(rep.select(col("id").as("doc_id"), col("rep")), Seq("doc_id"), "left_outer")
@@ -583,24 +583,6 @@ object DedupQueries {
         coalesce(col("comp"), col("rep"), col("doc_id")).as("canonical_id"))
       .withColumn("is_dup", col("doc_id") =!= col("canonical_id"))
       .orderBy("doc_id")
-  }
-
-  /** Builder-probe helpers (`Probe d18`): the d18 pipeline's first two
-    * phases in isolation, for wall-time decomposition. Not part of the
-    * query surface. */
-  def d18RepOnly(s: SparkSession, d: String): DataFrame =
-    simhashFingerprints(s, d)
-      .groupBy(col("simhash")).agg(min(col("id")).as("rep"))
-      .join(simhashFingerprints(s, d), "simhash")
-      .select(col("id"), col("rep"))
-  def d18QedgesOnly(s: SparkSession, d: String): DataFrame = {
-    val rep = d18RepOnly(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    simhashPairs(s, d)
-      .join(rep.select(col("id").as("doc_a"), col("rep").as("src")), "doc_a")
-      .join(rep.select(col("id").as("doc_b"), col("rep").as("dst")), "doc_b")
-      .where(col("src") =!= col("dst"))
-      .select("src", "dst").distinct()
   }
 
   /** d7 shingle width: 4-word n-grams — long enough that incidental
@@ -943,7 +925,7 @@ object DedupQueries {
       .select("src", "dst")
     val g = graft.graph.PropertyGraph.fromEdges(
       graft.graph.PropertyGraph.symmetrize(e))
-    val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D16Iters)
+    val comp = GmrRunner.runFixed(g, ConnectedComponentsProgram, D16Iters).vertices
       .select(col("id"), col("value").cast("long").as("comp"))
     val withComp = names.join(comp, col("hid") === col("id"), "left_outer")
       .select(col("name"), coalesce(col("comp"), col("hid")).as("comp"))

@@ -117,7 +117,7 @@ object GraphQueries {
     val path = s"${sys.props("user.dir")}/target/graft_derived/v$DerivedVersion/$tag/cc_labels"
     if (!new java.io.File(s"$path/_SUCCESS").exists())
       graft.core.Derived.recordBuild("cc_labels") {
-        GmrRunner.runFixed(partGraph(s, d), ConnectedComponentsProgram, CcIters)
+        GmrRunner.runFixed(partGraph(s, d), ConnectedComponentsProgram, CcIters).vertices
           .select(col("id"), col("value").cast("long").as("component"))
           .write.mode("overwrite").parquet(path)
       }
@@ -383,7 +383,7 @@ object GraphQueries {
     val g = partGraph(s, d)
     val nSeeds = g.degrees.where(col("id") % PprSeedMod === 0).count()
     GmrRunner.runFixed(PropertyGraph(g.degrees, g.edges),
-        new PersonalizedPageRank(nSeeds, col("id") % PprSeedMod === 0), PprIters)
+        new PersonalizedPageRank(nSeeds, col("id") % PprSeedMod === 0), PprIters).vertices
       .select(col("id"), round(col("value"), 8).as("pprank")).orderBy("id")
   }
 
@@ -588,22 +588,18 @@ object GraphQueries {
     * Per level: ONE aggregate exchange (the frontier message groupBy)
     * and ONE materialize — the old shape paid a second materialize per
     * level in the σ chain and relaxed from ALL reached rows instead of
-    * the frontier (strictly more join input every level). The per-level
-    * frames keep the r21 budget-gated broadcast hints: the frontier
-    * into the edge join (it is the small side against the O(E) edge
-    * view), the reached set into the freshness anti-join. Shuffle
-    * shape beyond the budget, identical results. */
-  private def bfsLevels(se: DataFrame, verts: DataFrame, srcs: DataFrame,
-      depth: Int): DataFrame = {
+    * the frontier (strictly more join input every level). In the
+    * broadcast shape the frontier is hinted into the edge join (it is
+    * the small side against the O(E) edge view) and the reached set into
+    * the freshness anti-join. `rowBound` is the state's maximum size,
+    * [[levelRowBound]]. */
+  private def bfsLevels(se: DataFrame, srcs: DataFrame, depth: Int,
+      rowBound: Long): DataFrame = {
     var state = srcs
       .select(col("q"), col("q").as("id"), lit(0L).as("v"), lit(1L).as("sg"))
       .materialize()
-    // Budget gate on the state's MAXIMUM size |srcs|·|V| (the old code
-    // counted the materialized cross-join of the same cardinality).
-    val fits = GraphOps.stateBroadcastFits(se.sparkSession,
-      srcs.count() * math.max(1L, verts.count()))
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    GraphOps.withLoopAqe(se.sparkSession, fits) {
+    GraphOps.stateLoop(se.sparkSession, rowBound) { shape =>
+    import shape.hint
     for (l <- 1 to depth) {
       val cand = hint(state.where(col("v") === (l - 1)))
         .join(se, col("id") === col("src"))
@@ -618,6 +614,11 @@ object GraphQueries {
     state
   }
 
+  /** |srcs|·|V|: the row bound of every (q, id) frame in [[bfsLevels]]
+    * and g14's δ chain. */
+  private def levelRowBound(verts: DataFrame, srcs: DataFrame): Long =
+    srcs.count() * math.max(1L, verts.count())
+
   def g14Betweenness(s: SparkSession, d: String): DataFrame = {
     val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
       .select("src", "dst")
@@ -629,28 +630,21 @@ object GraphQueries {
     // the shortest-path count σ — the separate per-level σ chain (13
     // more materialize jobs over the same frames) is gone; levels(l) is
     // now a cheap filter over the ONE checkpointed state frame.
-    val state = bfsLevels(se, verts, srcs, BcDepth)
-    // r21: every σ/δ frame below is bounded by |srcs|·|V| rows — the
-    // same budget gate as the BFS phase; hinted frames turn the
-    // per-level joins against the cached O(E) edge view and against each
-    // other into broadcast joins (one groupBy exchange per level, no
-    // sorts). Identical results; shuffle shape beyond the budget.
-    val bcFits = GraphOps.stateBroadcastFits(s,
-      srcs.count() * math.max(1L, verts.count()))
-    def hint(df: DataFrame): DataFrame = if (bcFits) broadcast(df) else df
-    // The δ chain below is linear, so a sparser checkpoint cadence is
-    // SEMANTICALLY safe — but measured SLOWER: every level is referenced
-    // 2-3× downstream (δ contrib, δ join, final union), and at cadence 3
-    // the re-evaluated join segments cost 13.0 s vs 5.8 s per-level at
-    // sf0.1. Per-level it stays.
-    def mat(df: DataFrame, l: Int): DataFrame = { val _ = l; df.materialize() }
+    val rowBound = levelRowBound(verts, srcs)
+    val state = bfsLevels(se, srcs, BcDepth, rowBound)
     def levels(l: Int): DataFrame =
       state.where(col("v") === l).select(col("q"), col("id"), col("sg"))
     // (3) δ back-propagation: deepest level first, σ-ratio weights
     val deltas = new Array[DataFrame](BcDepth + 1)
     deltas(BcDepth) = levels(BcDepth)
       .select(col("q"), col("id"), col("sg"), lit(0.0).as("dl"))
-    GraphOps.withLoopAqe(s, bcFits) {
+    // Every σ/δ frame is bounded by the same |srcs|·|V| rows. The chain
+    // is linear, so a sparser checkpoint cadence would be SEMANTICALLY
+    // safe — but measured SLOWER: every level is referenced 2-3×
+    // downstream (δ contrib, δ join, final union), and at cadence 3 the
+    // re-evaluated join segments cost 13.0 s vs 5.8 s per-level at sf0.1.
+    GraphOps.stateLoop(s, rowBound) { shape =>
+    import shape.hint
     for (l <- (BcDepth - 1) to 0 by -1) {
       val succ = deltas(l + 1)
         .select(col("q").as("wq"), col("id").as("wid"),
@@ -660,9 +654,10 @@ object GraphQueries {
         .groupBy(col("q"), col("id"))
         .agg(sum(col("sg").cast("double") / col("wsg") * (lit(1.0) + col("wdl")))
           .as("c"))
-      deltas(l) = mat(levels(l).join(hint(contrib), Seq("q", "id"), "left_outer")
+      deltas(l) = levels(l).join(hint(contrib), Seq("q", "id"), "left_outer")
         .select(col("q"), col("id"), col("sg"),
-          coalesce(col("c"), lit(0.0)).as("dl")), l)
+          coalesce(col("c"), lit(0.0)).as("dl"))
+        .materialize()
     }
     }
     val bc = (1 to BcDepth).map(deltas(_).select(col("id"), col("dl")))
@@ -692,7 +687,8 @@ object GraphQueries {
     val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
     // r22: reached rows only (unreached pairs were null-valued before
     // and filtered out right here — bfsLevels simply never carries them)
-    val hc = bfsLevels(se, verts, srcs, BcDepth).where(col("v") > 0)
+    val hc = bfsLevels(se, srcs, BcDepth, levelRowBound(verts, srcs))
+      .where(col("v") > 0)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_reached"),
         sum(expr("1000000L div v")).as("harmonic_ppm"))
@@ -719,7 +715,7 @@ object GraphQueries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verts = se.select(col("src").as("id")).distinct().materialize()
     val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
-    bfsLevels(se, verts, srcs, BcDepth)
+    bfsLevels(se, srcs, BcDepth, levelRowBound(verts, srcs))
       .where(col("v") > 0)
       .groupBy(col("q"))
       .agg(max(col("v")).as("ecc"), count(lit(1)).as("n_reached"),
@@ -744,14 +740,12 @@ object GraphQueries {
     val e = partPairsMaterialized(s, d).select("src", "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verts = vertexDegMaterialized(s, d).select(col("id")).materialize()
-    // r21 (the GmrRunner superstep discipline, guide §2.4/§3.1): hub and
-    // authority frames are O(V) — when V fits the state-broadcast budget,
-    // the score join broadcasts the score side (the cached edge view
-    // streams map-side) and the rejoin against the vertex dimension
-    // broadcasts the normalized sums, so each half-step has exactly one
-    // exchange (the raw groupBy). Shuffle shape beyond the budget.
-    val fits = GraphOps.stateBroadcastFits(s, verts.count())
-    def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
+    var hub = verts.select(col("id"), lit(HitsScale).as("h"))
+    var auth = verts.select(col("id"), lit(0L).as("a"))
+    // Hub and authority frames are O(V): a broadcast-shape half-step has
+    // exactly one exchange (the raw groupBy).
+    GraphOps.stateLoop(s, verts.count()) { shape =>
+    import shape.hint
     // raw = Σ over in-(out-)edges; normalized = raw·scale div max(raw):
     // vertices missing from the sum side score 0 (no in-/out-edges).
     def step(scores: DataFrame, scoreCol: String, fromCol: String,
@@ -766,9 +760,6 @@ object GraphQueries {
         .select(col("id"), coalesce(col(outName), lit(0L)).as(outName))
         .materialize()
     }
-    var hub = verts.select(col("id"), lit(HitsScale).as("h"))
-    var auth = verts.select(col("id"), lit(0L).as("a"))
-    GraphOps.withLoopAqe(s, fits) {
     for (_ <- 1 to HitsIters) {
       auth = step(hub, "h", "src", "dst", "a")
       hub = step(auth, "a", "dst", "src", "h")
@@ -1062,13 +1053,13 @@ object GraphQueries {
 
   def g2Sssp(s: SparkSession, d: String): DataFrame = {
     val g = partGraph(s, d)
-    GmrRunner.runFixed(g, new Sssp(sourceVertex(g)), SsspIters)
+    GmrRunner.runFixed(g, new Sssp(sourceVertex(g)), SsspIters).vertices
       .select(col("id"), col("value").cast("long").as("dist")).orderBy("id")
   }
 
   def g3Bfs(s: SparkSession, d: String): DataFrame = {
     val g = partGraph(s, d)
-    GmrRunner.runFixed(g, new Bfs(sourceVertex(g)), BfsIters)
+    GmrRunner.runFixed(g, new Bfs(sourceVertex(g)), BfsIters).vertices
       .select(col("id"), col("value").cast("long").as("hops")).orderBy("id")
   }
 

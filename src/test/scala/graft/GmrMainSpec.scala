@@ -78,7 +78,7 @@ class GmrMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // traced fixed-length run ends at the same state as runFixed
     val fixedVals = graft.graph.GmrRunner
-      .runFixed(pr.graph, pr.program, 5)
+      .runFixed(pr.graph, pr.program, 5).vertices
       .select("id", "value").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val tracedVals = res.vertices
       .select("id", "value").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -48,10 +48,9 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fixed mode early-exits on an emptied frontier, result identical (r21)") {
     // Line 1-2-3: CC converges in 2 hops; frontier empties at superstep 3.
-    // loopTimed is fixed mode (convergenceCheck=false) — with the r21
-    // early exit it must stop well short of the requested 10 supersteps
-    // and still produce the exact fixpoint labels.
-    val r = GmrRunner.loopTimed(lineGraph, ConnectedComponentsProgram, 10)
+    // runFixed with the r21 early exit must stop well short of the
+    // requested 10 supersteps and still produce the exact fixpoint labels.
+    val r = GmrRunner.runFixed(lineGraph, ConnectedComponentsProgram, 10)
     assert(r.iterations < 10, s"expected early exit, ran ${r.iterations}")
     val labels = r.vertices.collect()
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
@@ -59,7 +58,7 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Non-frontier programs must NOT early-exit in fixed mode (PageRank
     // needs every contribution every round).
     val pr = PageRank(lineGraph)
-    val r2 = GmrRunner.loopTimed(pr.graph, pr.program, 4)
+    val r2 = GmrRunner.runFixed(pr.graph, pr.program, 4)
     assert(r2.iterations === 4)
   }
 
@@ -267,7 +266,7 @@ class GraphAlgoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val g = PropertyGraph.fromEdges(PropertyGraph.symmetrize(
       edgeDf(100L -> 1L, 100L -> 2L, 100L -> 3L, 3L -> 4L)))
     val pr = GmrRunner.runFixed(PropertyGraph(g.degrees, g.edges),
-        new PersonalizedPageRank(nSeeds = 1, isSeed = col("id") % 100 === 0), 20)
+        new PersonalizedPageRank(nSeeds = 1, isSeed = col("id") % 100 === 0), 20).vertices
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     // dangling-free graph: teleport + propagation conserve total mass 1
     assert(math.abs(pr.values.sum - 1.0) < 1e-6)

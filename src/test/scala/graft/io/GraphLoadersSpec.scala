@@ -161,6 +161,26 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vImbal === 1.0 && eImbal === 1.0 && cuts === 0L)
   }
 
+  test("partstats counts an isolated vertex (a zero-neighbor `id vwgt` row)") {
+    import spark.implicits._
+    // Vertex 4 has no edges: the writer emits it as a 2-token row, which
+    // the one-scan reader must parse as an empty neighbor list.
+    val edges = Seq((1L, 2L, 1.0), (2L, 1L, 1.0), (2L, 3L, 1.0), (3L, 2L, 1.0))
+      .toDF("src", "dst", "weight")
+    val g = graft.graph.PropertyGraph(
+      spark.range(1, 5).select(org.apache.spark.sql.functions.col("id")), edges)
+    val base = java.nio.file.Files.createTempDirectory("graft-psi").toString + "/iso"
+    GraphLoaders.writeMetisSubgraphs(g, parts = 2, base)
+    val rows = GraphLoaders.partitionStats(spark, base, 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    // id mod 2: part 0 owns {2, 4} (2 records, both cut), part 1 owns
+    // {1, 3} (2 records, both cut).
+    assert(rows === Array((0L, 2L, 2L, 2L), (1L, 2L, 2L, 2L)))
+    val isolated = GraphLoaders.writtenSubgraphRecords(spark, base, 2)
+      .where(org.apache.spark.sql.functions.col("id") === 4L).collect()
+    assert(isolated.length === 1 && isolated.head.getSeq[Any](2).isEmpty)
+  }
+
   test("locality assignment cuts strictly fewer edges than id-mod-parts (O8)") {
     // The reference's headline Zoltan capability (gmr.cpp:107-167,
     // "minimize inter-node traffic"): LPA communities balanced into
