@@ -119,23 +119,29 @@ object ConnectedComponentsProgram extends VertexProgram {
 /** Non-iterative whole-graph operators. */
 object GraphOps {
 
-  /** Broadcast budget for iterative-loop state frames, read by
-    * [[stateLoop]]. Estimated at a conservative 64 B per state row (id +
-    * value + delta + a static column or two, plus row overhead); 256 MB ≈
-    * 4M vertices, routine executor memory on a real cluster. Larger
-    * states take the shuffle-join shape, so the knob is a latency
-    * optimization, never a correctness or OOM hazard. `0` forces the
-    * shuffle shape. */
-  val StateBroadcastBytesKey = "spark.graft.stateBroadcastBytes"
-  private val StateBroadcastBytesDefault: Long = 256L << 20
-  private val StateBytesPerRow = 64L
+  /** The engine's one broadcast budget: every operator that chooses
+    * between a deliberate broadcast and a shuffle join asks
+    * [[broadcastFits]], with its own per-row size estimate. These are
+    * broadcasts the planner would not pick itself (checkpointed frames
+    * carry inflated size estimates, and `autoBroadcastJoinThreshold`
+    * guards per-join sides, not one build per loop or write). 256 MB is
+    * routine executor memory on a real cluster; anything larger takes
+    * the shuffle shape, so the budget is a latency setting, never a
+    * correctness or OOM hazard. A value ≤ 0 forces every shuffle shape. */
+  val BroadcastBytesKey = "spark.graft.broadcastBytes"
+  private val BroadcastBytesDefault: Long = 256L << 20
 
-  private def stateBroadcastFits(spark: org.apache.spark.sql.SparkSession,
-                                 rows: Long): Boolean = {
-    val budget = spark.conf.getOption(StateBroadcastBytesKey).map(_.toLong)
-      .getOrElse(StateBroadcastBytesDefault)
-    budget > 0 && rows * StateBytesPerRow <= budget
+  /** Does a broadcast of an estimated `bytes` fit the budget? */
+  private[graft] def broadcastFits(spark: org.apache.spark.sql.SparkSession,
+                                   bytes: Long): Boolean = {
+    val budget = spark.conf.getOption(BroadcastBytesKey).map(_.toLong)
+      .getOrElse(BroadcastBytesDefault)
+    budget > 0 && bytes <= budget
   }
+
+  /** State rows are estimated at a conservative 64 B (id + value + delta
+    * + a static column or two, plus row overhead): 256 MB ≈ 4M vertices. */
+  private val StateBytesPerRow = 64L
 
   /** The join shape [[stateLoop]] chose for one loop: `broadcast` when
     * the loop's state fits the budget, and `hint` to mark a state-sized
@@ -151,7 +157,7 @@ object GraphOps {
     *
     * `rowBound` bounds the rows of every per-round state frame (O(V)
     * state, a shrinking survivor set, or an O(|srcs|·V) level table).
-    * When it fits the state-broadcast budget, the body hints those
+    * When it fits the broadcast budget, the body hints those
     * frames for broadcast: each per-round join against the cached O(E)
     * edge frame or another state frame becomes a broadcast hash join,
     * so a round's only exchanges are its aggregates and there are no
@@ -174,7 +180,7 @@ object GraphOps {
     * loop bodies keeps AQE unconditionally. */
   def stateLoop[T](spark: org.apache.spark.sql.SparkSession, rowBound: Long)(
       body: LoopShape => T): T = {
-    val shape = new LoopShape(stateBroadcastFits(spark, rowBound))
+    val shape = new LoopShape(broadcastFits(spark, rowBound * StateBytesPerRow))
     if (!shape.broadcast) body(shape)
     else {
       val key = "spark.sql.adaptive.enabled"
@@ -355,16 +361,14 @@ object GraphOps {
 
   def triangleCount(canonicalEdges: DataFrame): Long = triangles(canonicalEdges).count()
 
-  /** Skew knobs for the id-oriented wedge fallback ([[trianglesSalted]]):
-    * a middle vertex whose `in·out` wedge product meets the threshold
-    * has its wedge set spread over `wedgeSalts` join keys. The default
-    * threshold (~4M pairs) marks only vertices whose single-key wedge
-    * set would dominate a task; the hot set is bounded by
-    * Σ(in·out)/threshold rows — broadcastable by construction. */
-  private val WedgeSaltsKey = "spark.graft.wedgeSalts"
-  private val WedgeSaltsDefault = 16
-  private val WedgeSaltThresholdKey = "spark.graft.wedgeSaltThreshold"
-  private val WedgeSaltThresholdDefault = 1L << 22
+  /** Hot-middle salting for the id-oriented wedge fallback
+    * ([[trianglesSalted]]): a middle vertex whose `in·out` wedge product
+    * meets the threshold has its wedge set spread over `WedgeSalts` join
+    * keys. The threshold (~4M pairs) marks only vertices whose
+    * single-key wedge set would dominate a task; the hot set is bounded
+    * by Σ(in·out)/threshold rows — broadcastable by construction. */
+  private val WedgeSalts = 16
+  private val WedgeSaltThreshold = 1L << 22
 
   /** Wedge enumeration of the id-oriented formulation with HOT-MIDDLE
     * salting (VERDICT r8 item 3). The a<b<c wedge join keys on the
@@ -382,24 +386,18 @@ object GraphOps {
     * re-keys triangles away from the min-vertex attribution the grouped
     * contract needs); what the salt fixes is the per-task bound:
     * `in·out` → `in·out / salts`. */
-  private[graph] def saltedWedges(canonicalEdges: DataFrame): DataFrame = {
-    val spark = canonicalEdges.sparkSession
-    // Clamp to ≥ 1: salts = 0 would explode hot b→c rows into an EMPTY
-    // salt array and silently drop their triangles.
-    val salts = math.max(1, spark.conf.getOption(WedgeSaltsKey).map(_.toInt)
-      .getOrElse(WedgeSaltsDefault))
-    val thr = spark.conf.getOption(WedgeSaltThresholdKey).map(_.toLong)
-      .getOrElse(WedgeSaltThresholdDefault)
+  private[graph] def saltedWedges(canonicalEdges: DataFrame,
+      saltThreshold: Long): DataFrame = {
     val e = canonicalEdges.select("src", "dst")
     val hot = e.groupBy(col("dst").as("b")).agg(count(lit(1)).as("ind"))
       .join(e.groupBy(col("src").as("b")).agg(count(lit(1)).as("outd")), "b")
-      .where(col("ind") * col("outd") >= thr)
+      .where(col("ind") * col("outd") >= saltThreshold)
       .select(col("b"), lit(true).as("hot"))
     val ab = e.join(broadcast(hot), e("dst") === hot("b"), "left_outer")
       .select(col("src"), col("dst"),
-        when(col("hot"), pmod(xxhash64(col("src")), lit(salts.toLong)))
+        when(col("hot"), pmod(xxhash64(col("src")), lit(WedgeSalts.toLong)))
           .otherwise(lit(0L)).as("salt"))
-    val saltArr = array((0 until salts).map(i => lit(i.toLong)): _*)
+    val saltArr = array((0 until WedgeSalts).map(i => lit(i.toLong)): _*)
     val bc = e.join(broadcast(hot), e("src") === hot("b"), "left_outer")
       .select(col("src"), col("dst"),
         explode(when(col("hot"), saltArr).otherwise(array(lit(0L)))).as("salt"))
@@ -415,9 +413,10 @@ object GraphOps {
     * key. The closing-edge join is unsalted: its key (a, c) is an edge
     * lookup bounded by the true pair list, with no per-key
     * amplification. */
-  private[graph] def trianglesSalted(canonicalEdges: DataFrame): DataFrame = {
+  private[graph] def trianglesSalted(canonicalEdges: DataFrame,
+      saltThreshold: Long): DataFrame = {
     val e = canonicalEdges.select("src", "dst")
-    saltedWedges(e)
+    saltedWedges(e, saltThreshold)
       .join(e.select(col("src").as("a"), col("dst").as("c")), Seq("a", "c"))
       .select(col("a"), col("b"), col("c"))
   }
@@ -445,33 +444,20 @@ object GraphOps {
       .cast("long").as("n_triangles"))
   }
 
-  /** Broadcast budget for the intersect kernel's adjacency table —
-    * deliberately its OWN knob, not `autoBroadcastJoinThreshold`: the
-    * 10 MB join default guards against broadcasting a join side per
-    * probe row, while this is ONE broadcast per query that replaces
-    * shuffling the Σdeg² wedge set (the r7 measurement: 1.5 s intersect
-    * vs ~9 s wedge at a 10 MB adjacency). 256 MB default — routine
-    * executor-memory territory on any real cluster; the wedge fallback
-    * covers everything beyond. */
-  private val AdjacencyBroadcastBytesKey = "spark.graft.adjacencyBroadcastBytes"
-  private val AdjacencyBroadcastBytesDefault = 256L << 20
-
   /** Kernel selector (VERDICT r7 item 3): does the canonical adjacency
-    * table fit the broadcast budget? Estimated honestly from one
-    * aggregate pass over the (usually already persisted) edge frame:
-    * 8 bytes per edge entry (the packed long arrays) + ~48 per distinct
-    * source row (row + array headers), with `approx_count_distinct`
-    * for the row term — a budget decision, not arithmetic that needs
-    * exactness. */
+    * table fit the broadcast budget ([[broadcastFits]])? The broadcast
+    * is ONE build per query that replaces shuffling the Σdeg² wedge set
+    * (the r7 measurement: 1.5 s intersect vs ~9 s wedge at a 10 MB
+    * adjacency). Estimated honestly from one aggregate pass over the
+    * (usually already persisted) edge frame: 8 bytes per edge entry (the
+    * packed long arrays) + ~48 per distinct source row (row + array
+    * headers), with `approx_count_distinct` for the row term — a budget
+    * decision, not arithmetic that needs exactness. */
   def adjacencyFitsBroadcast(canonicalEdges: DataFrame): Boolean = {
-    val budget = canonicalEdges.sparkSession.conf
-      .getOption(AdjacencyBroadcastBytesKey).map(_.toLong)
-      .getOrElse(AdjacencyBroadcastBytesDefault)
-    if (budget <= 0) return false
     val r = canonicalEdges
       .agg(count(lit(1)).as("e"), approx_count_distinct(col("src")).as("v"))
       .first()
-    8L * r.getLong(0) + 48L * r.getLong(1) <= budget
+    broadcastFits(canonicalEdges.sparkSession, 8L * r.getLong(0) + 48L * r.getLong(1))
   }
 
   /** Global triangle count with data-driven kernel choice: the
@@ -497,7 +483,13 @@ object GraphOps {
     * broadcast budget cannot concentrate its in·out wedge set in one
     * straggler task. */
   def triangleCountByGroup(canonicalEdges: DataFrame,
-                           group: Column => Column): DataFrame = {
+                           group: Column => Column): DataFrame =
+    triangleCountByGroup(canonicalEdges, group, WedgeSaltThreshold)
+
+  /** [[triangleCountByGroup]] with the fallback's salt threshold as a
+    * parameter, so a spec can salt a small fixture. */
+  private[graph] def triangleCountByGroup(canonicalEdges: DataFrame,
+      group: Column => Column, saltThreshold: Long): DataFrame = {
     // Uniform output contract for BOTH kernels: one row per group value
     // present among the edges' min-vertices, zero-triangle groups
     // included. Neither kernel supplies that on its own — the wedge
@@ -515,7 +507,7 @@ object GraphOps {
               col("asrc"), col("adst"))), lit(0L))
             .cast("long").as("n_triangles"))
       else
-        trianglesSalted(canonicalEdges)
+        trianglesSalted(canonicalEdges, saltThreshold)
           .groupBy(group(col("a")).as("part"))
           .agg(count(lit(1)).cast("long").as("n_triangles"))
     groups.join(sums, Seq("part"), "left_outer")
@@ -575,32 +567,15 @@ object GraphOps {
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_triangles"))
 
-  /** Kill switch for the frontier-incremental LPA plan (r10): `false`
-    * forces the full per-round recompute. Exists for the equivalence
-    * spec (GraphAlgoSpec proves frontier ≡ full per round) and as an
-    * operational escape hatch; results are identical either way. */
-  private val LpaFrontierKey = "spark.graft.lpa.frontier"
-
-  /** Broadcast budget for LPA's per-round frontier / dirty-vertex id
-    * sets — the adjacencyBroadcastBytes discipline: a deliberate
-    * bounded broadcast that turns both semi-joins into map-side
-    * filters (no edge-side shuffle), falling back to shuffle semi-joins
-    * beyond the budget. 64 MB ≈ 2M ids at the conservative 32 B/row
-    * estimate — routine executor memory at cluster scale. */
-  private val FrontierBroadcastBytesKey = "spark.graft.frontierBroadcastBytes"
-  private val FrontierBroadcastBytesDefault = 64L << 20
-
   /** Semi-join filter `edges[keyCol ∈ ids]`, broadcasting the id set
-    * when `nIds` fits the frontier budget (ids is always O(V) and
-    * already materialized, so the count is a cheap cached-scan action
-    * paid by the caller). */
+    * (estimated at 32 B per id) when it fits the broadcast budget: both
+    * of LPA's semi-joins then become map-side filters with no edge-side
+    * shuffle. `ids` is always O(V) and already materialized, so the
+    * count is a cheap cached-scan action paid by the caller. */
   private def frontierSemi(edges: DataFrame, keyCol: String,
                            ids: DataFrame, nIds: Long): DataFrame = {
-    val budget = edges.sparkSession.conf
-      .getOption(FrontierBroadcastBytesKey).map(_.toLong)
-      .getOrElse(FrontierBroadcastBytesDefault)
     val keyed = ids.select(col("id").as(keyCol))
-    edges.join(if (nIds * 32L <= budget) broadcast(keyed) else keyed,
+    edges.join(if (broadcastFits(edges.sparkSession, nIds * 32L)) broadcast(keyed) else keyed,
       Seq(keyCol), "left_semi")
   }
 
@@ -628,7 +603,7 @@ object GraphOps {
     * COLLAPSES (20k-vertex run: 20000/15005/14588/13730/751/1/0), so
     * full-mode rounds check the changed count only on an
     * exponential-backoff schedule (rounds 2, 4, 8, …) — a non-check
-    * round is plan-identical to the frontier=false path, zero extra
+    * round is plan-identical to the full-recompute path, zero extra
     * jobs — while frontier-mode rounds check every round (the frames
     * are changed-set-sized, so the checks are cheap there). A check
     * costs one pick materialization + one dimension-sized diff; the
@@ -640,11 +615,16 @@ object GraphOps {
     * after a disengage. Same
     * fixed-iteration result as the full recompute, bit for bit
     * (GraphAlgoSpec proves equality at every iteration count). */
-  def labelPropagation(g: PropertyGraph, iters: Int): DataFrame = {
+  def labelPropagation(g: PropertyGraph, iters: Int): DataFrame =
+    labelPropagation(g, iters, frontierOn = true)
+
+  /** [[labelPropagation]] with the frontier tracking optional:
+    * `frontierOn = false` is the full per-round recompute, the reference
+    * GraphAlgoSpec proves the frontier rounds against. */
+  private[graph] def labelPropagation(g: PropertyGraph, iters: Int,
+                                      frontierOn: Boolean): DataFrame = {
     val edges = g.edges.select(col("src"), col("dst"))
     var labels = g.vertices.select(col("id"), col("id").as("label"))
-    val frontierOn = edges.sparkSession.conf
-      .getOption(LpaFrontierKey).forall(_.toBoolean)
     // Full-round cutoff denominator AND the loop's state row bound (labels
     // and pick are O(V)); one O(V) count over the (small, usually
     // parquet-backed) vertex frame.

@@ -45,14 +45,17 @@ object Materialize {
       val sc = df.sparkSession.sparkContext
       val want = df.sparkSession.conf.getOption(DirKey).getOrElse(
         sys.props("java.io.tmpdir") + "/graft-checkpoints")
-      // setCheckpointDir creates a session-unique subdir under the
-      // requested base, so compare against the base: re-set whenever the
-      // configured dir changes mid-session instead of silently ignoring
-      // the new value. Checkpoint FILES are only reclaimed when
+      // setCheckpointDir creates a fresh `<base>/<uuid>` subdir and
+      // reports it fully qualified (`file:/…`, `hdfs://…`), so compare
+      // its parent against the qualified base: re-set only when the
+      // configured dir changes mid-session, not on every round.
+      // Checkpoint FILES are only reclaimed when
       // spark.cleaner.referenceTracking.cleanCheckpoints=true (a
       // startup-time conf — GraftSession sets it); long iterative jobs
       // otherwise accumulate unbounded checkpoint data.
-      if (!sc.getCheckpointDir.exists(_.startsWith(want)))
+      val base = new org.apache.hadoop.fs.Path(want)
+      val qualified = base.getFileSystem(sc.hadoopConfiguration).makeQualified(base)
+      if (!sc.getCheckpointDir.exists(d => new org.apache.hadoop.fs.Path(d).getParent == qualified))
         sc.setCheckpointDir(want)
       df.checkpoint() // eager, written to the checkpoint dir
     } else df.localCheckpoint(true)

@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.PropertyGraph
+import graft.graph.{GraphOps, PropertyGraph}
 
 /** Loaders for the reference's three text graph formats (SURVEY.md §2.1
   * O1/O4/O5/O6, FIXTURES.md §A). All are thin declarative pipelines over
@@ -188,21 +188,18 @@ object GraphLoaders {
     // The assignment is consumed twice (edge dst ownership + vertex
     // ownership) and its plan is the LPA/LPT pipeline — persist it once.
     // It is O(V) two-long rows, so when it fits the broadcast budget
-    // (same discipline as spark.graft.adjacencyBroadcastBytes — one
-    // deliberate broadcast per write replacing an O(E) shuffle exchange
-    // on the edge side, which the sf10 decomposition named as the write
-    // leg's dominant cost term; VERDICT r9 item 2) the ownership joins
-    // broadcast; beyond the budget they fall back to the shuffle join.
+    // (GraphOps.broadcastFits — one deliberate broadcast per write
+    // replacing an O(E) shuffle exchange on the edge side, which the
+    // sf10 decomposition named as the write leg's dominant cost term;
+    // VERDICT r9 item 2) the ownership joins broadcast; beyond the
+    // budget they fall back to the shuffle join.
     val assignPersisted = assignment.map(_
       .select(col("id"), col("part").cast("long").as("part"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val assignBroadcasts = assignPersisted.exists { a =>
-      val budget = spark.conf.getOption(AssignmentBroadcastBytesKey)
-        .map(_.toLong).getOrElse(AssignmentBroadcastBytesDefault)
-      // 16 payload bytes + ~16 row overhead per (id, part) row; the
-      // count also materializes the persisted frame exactly once.
-      budget > 0 && 32L * a.count() <= budget
-    }
+    // 16 payload bytes + ~16 row overhead per (id, part) row; the count
+    // also materializes the persisted frame exactly once.
+    val assignBroadcasts =
+      assignPersisted.exists(a => GraphOps.broadcastFits(spark, 32L * a.count()))
     // Owner of vertex v: the assignment frame's part when provided (the
     // locality path, SURVEY §2.1 O8), else `id mod parts` (the reference's
     // random/hash convention, O7 — also the fallback for ids the
@@ -324,16 +321,6 @@ object GraphLoaders {
     }
   }
 
-  /** Broadcast budget for the locality writer's `(id, part)` assignment
-    * frame — the adjacencyBroadcastBytes discipline (Algorithms.scala):
-    * a deliberate one-per-write broadcast that deletes the edge-side
-    * shuffle exchange from the ownership join, NOT the per-join
-    * autoBroadcastJoinThreshold guard. 256 MB ≈ 8M vertices of
-    * assignment — routine executor memory on a real cluster; larger
-    * assignments fall back to the shuffle join automatically. */
-  private val AssignmentBroadcastBytesKey = "spark.graft.assignmentBroadcastBytes"
-  private val AssignmentBroadcastBytesDefault = 256L << 20
-
   /** Locality-aware part assignment — the engine's analog of the
     * reference's Zoltan/METIS "minimize inter-node traffic" partitioner
     * (`/root/reference/gmr.cpp:107-167`, `partition.h:271-364`;
@@ -435,14 +422,18 @@ object GraphLoaders {
     * with no line-position bookkeeping — the whole read is ONE
     * splittable FileScan (no zipWithIndex, no per-file `first()`), one
     * pass, whole-stage codegen. Reference-format files with other fmt
-    * masks keep using [[metisSubgraph]].
+    * masks keep using [[metisSubgraph]]; each file's header is checked
+    * first ([[requireWrittenHeader]]), so they fail loudly here instead
+    * of parsing into short counts.
     *
     * Returns one row per vertex line: (part, id, ns) with
     * `ns: array<struct<dst, dst_part, weight>>` in file order. */
   private[graft] def writtenSubgraphRecords(spark: SparkSession, basePath: String,
                                             parts: Int): DataFrame = {
     (0 until parts).map { p =>
-      spark.read.text(s"$basePath.subgraph.$p")
+      val path = s"$basePath.subgraph.$p"
+      requireWrittenHeader(spark, path)
+      spark.read.text(path)
         .select(lit(p.toLong).as("part"), split(trim(col("value")), " ").as("t"))
     }.reduce(_ union _)
       .where(size(col("t")) % 3 === 2) // data rows only; header is ≡ 1 (mod 3)
@@ -456,6 +447,22 @@ object GraphLoaders {
           element_at(col("t"), g * 3 + 3).cast("long").as("dst"),
           element_at(col("t"), g * 3 + 4).cast("int").as("dst_part"),
           element_at(col("t"), g * 3 + 5).cast("double").as("weight"))).as("ns"))
+  }
+
+  /** Reads the first line of `path` through the Hadoop FileSystem (no
+    * Spark job) and requires the header [[writeMetisSubgraphs]] emits: `nvtxs nedges
+    * 1111` with ncon absent, 0 or 1. */
+  private def requireWrittenHeader(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p),
+      java.nio.charset.StandardCharsets.UTF_8))
+    val header = try Option(in.readLine()).getOrElse("") finally in.close()
+    val t = header.trim.split("\\s+")
+    val ok = (t.length == 3 || t.length == 4) && t.take(2).forall(_.forall(_.isDigit)) &&
+      t(2) == "1111" && (t.length == 3 || t(3) == "0" || t(3) == "1")
+    require(ok, s"$path: header '$header' is not 'nvtxs nedges 1111 [0|1]', the " +
+      "layout writeMetisSubgraphs emits; read other subgraph files with metisSubgraph")
   }
 
   /** [[partitionStats]] over an already-parsed [[writtenSubgraphRecords]]

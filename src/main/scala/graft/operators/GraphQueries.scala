@@ -552,43 +552,21 @@ object GraphQueries {
     * E), and sampled-source betweenness IS the standard scale form; exact
     * all-sources betweenness is O(V·E) and not a 100 TB operation).
     * BFS depth 12 covers the measured eccentricity ≤ 10 with slack —
-    * min-relaxation is monotone, so extra rounds are no-ops. */
+    * levels past the eccentricity reach no fresh vertex. */
   private val BcSources = 5
   private val BcDepth = 12
 
-  /** g14: sampled-source betweenness centrality (Brandes) — "which parts
-    * broker the co-purchase network". Three phases, each vectorized over
-    * all sources at once (source id is just a key column):
-    * (1) BFS distances by unrolled min-relaxation; (2) shortest-path
-    * counts σ level-by-level over the FIXED distance table (each level is
-    * one equi-join + one integer aggregate — no iteration-order
-    * ambiguity); (3) dependency back-propagation δ from the deepest level
-    * with σ-ratio weights. σ is exact BIGINT; δ is double but each term
-    * is one division and one multiply (the PageRank float-sum class,
-    * rounded to 6). The oracle unrolls the identical three chains. */
-  /** Multi-source BFS distances keyed by (q, id) over a symmetric edge
-    * view: unrolled min-relaxation, one equi-join + one aggregate per
-    * step, every step materialized (dist references itself twice per
-    * relaxation — a lazy chain is a 2^k recompute tree). Shared by g14
-    * (Brandes phase 1) and g21 (harmonic closeness). */
-  /** r22 rewrite (guide §1.2/§2.3): level-synchronous frontier BFS that
-    * ALSO carries the shortest-path count σ, replacing the former
-    * min-relaxation distance table plus g14's separate per-level σ
-    * chain. Returns one row per REACHED (q, id): `v` = BFS level,
-    * `sg` = number of shortest q→id paths (exact BIGINT). Equivalence
-    * with the old two-chain form: on unit weights a vertex is first
-    * reached at level l exactly through neighbors at level l−1 (older
-    * senders can never improve a min-relaxation), so "newly reached at
-    * l" ≡ "distance l"; and the σ recurrence sums predecessor σ over
-    * edges from level l−1 — the identical integer sum the old σ chain
-    * computed against the fixed distance table. Unreached (q, id) pairs
-    * are ABSENT instead of null-valued; every caller already left-joins
-    * against the vertex dimension.
+  /** Multi-source level-synchronous BFS over a symmetric edge view that
+    * also carries the shortest-path count σ. Returns one row per REACHED
+    * (q, id): `v` = BFS level, `sg` = number of shortest q→id paths
+    * (exact BIGINT); unreached pairs are absent, and every caller
+    * left-joins against the vertex dimension. On unit weights a vertex
+    * first reached at level l is reached exactly through neighbors at
+    * level l−1, so "newly reached at l" ≡ "distance l", and σ sums
+    * predecessor σ over edges from level l−1. Shared by g14, g21 and g23.
     *
     * Per level: ONE aggregate exchange (the frontier message groupBy)
-    * and ONE materialize — the old shape paid a second materialize per
-    * level in the σ chain and relaxed from ALL reached rows instead of
-    * the frontier (strictly more join input every level). In the
+    * and ONE materialize, relaxing from the frontier only. In the
     * broadcast shape the frontier is hinted into the edge join (it is
     * the small side against the O(E) edge view) and the reached set into
     * the freshness anti-join. `rowBound` is the state's maximum size,
@@ -619,54 +597,70 @@ object GraphQueries {
   private def levelRowBound(verts: DataFrame, srcs: DataFrame): Long =
     srcs.count() * math.max(1L, verts.count())
 
-  def g14Betweenness(s: SparkSession, d: String): DataFrame = {
+  /** The strong-tie subgraph (the g13 weight floor) as a persisted
+    * symmetric edge view `se`, its vertex set, and the [[BcSources]]
+    * smallest-id sources — the g14/g21/g23 set-up. `body` must return a
+    * plan that reads only checkpointed frames: `se` is released when it
+    * returns. */
+  private def strongTieBfs(s: SparkSession, d: String)(
+      body: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
     val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
       .select("src", "dst")
     val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = se.select(col("src").as("id")).distinct().materialize()
-    val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
-    // (1)+(2) fused (r22): one frontier BFS carries both the level AND
-    // the shortest-path count σ — the separate per-level σ chain (13
-    // more materialize jobs over the same frames) is gone; levels(l) is
-    // now a cheap filter over the ONE checkpointed state frame.
-    val rowBound = levelRowBound(verts, srcs)
-    val state = bfsLevels(se, srcs, BcDepth, rowBound)
-    def levels(l: Int): DataFrame =
-      state.where(col("v") === l).select(col("q"), col("id"), col("sg"))
-    // (3) δ back-propagation: deepest level first, σ-ratio weights
-    val deltas = new Array[DataFrame](BcDepth + 1)
-    deltas(BcDepth) = levels(BcDepth)
-      .select(col("q"), col("id"), col("sg"), lit(0.0).as("dl"))
-    // Every σ/δ frame is bounded by the same |srcs|·|V| rows. The chain
-    // is linear, so a sparser checkpoint cadence would be SEMANTICALLY
-    // safe — but measured SLOWER: every level is referenced 2-3×
-    // downstream (δ contrib, δ join, final union), and at cadence 3 the
-    // re-evaluated join segments cost 13.0 s vs 5.8 s per-level at sf0.1.
-    GraphOps.stateLoop(s, rowBound) { shape =>
-    import shape.hint
-    for (l <- (BcDepth - 1) to 0 by -1) {
-      val succ = deltas(l + 1)
-        .select(col("q").as("wq"), col("id").as("wid"),
-          col("sg").as("wsg"), col("dl").as("wdl"))
-      val contrib = hint(levels(l)).join(se, col("id") === col("src"))
-        .join(hint(succ), col("wq") === col("q") && col("wid") === col("dst"))
-        .groupBy(col("q"), col("id"))
-        .agg(sum(col("sg").cast("double") / col("wsg") * (lit(1.0) + col("wdl")))
-          .as("c"))
-      deltas(l) = levels(l).join(hint(contrib), Seq("q", "id"), "left_outer")
-        .select(col("q"), col("id"), col("sg"),
-          coalesce(col("c"), lit(0.0)).as("dl"))
-        .materialize()
-    }
-    }
-    val bc = (1 to BcDepth).map(deltas(_).select(col("id"), col("dl")))
-      .reduce(_ union _)
-      .groupBy(col("id")).agg(sum(col("dl")).as("b"))
-    verts.join(bc, Seq("id"), "left_outer")
-      .select(col("id"), round(coalesce(col("b"), lit(0.0)), 6).as("betweenness"))
-      .orderBy("id")
+    try {
+      val verts = se.select(col("src").as("id")).distinct().materialize()
+      body(se, verts, verts.orderBy("id").limit(BcSources).select(col("id").as("q")))
+    } finally se.unpersist(blocking = false)
   }
+
+  /** g14: sampled-source betweenness centrality (Brandes) — "which parts
+    * broker the co-purchase network", vectorized over all sources at
+    * once (source id is just a key column). (1) [[bfsLevels]] gives
+    * every reached (q, id) its level and shortest-path count σ; (2) the
+    * dependency δ back-propagates from the deepest level with σ-ratio
+    * weights, one materialized frame per level. σ is exact BIGINT; δ is
+    * double but each term is one division and one multiply (the PageRank
+    * float-sum class, rounded to 6). The oracle unrolls the same
+    * chains. */
+  def g14Betweenness(s: SparkSession, d: String): DataFrame =
+    strongTieBfs(s, d) { (se, verts, srcs) =>
+      val rowBound = levelRowBound(verts, srcs)
+      val state = bfsLevels(se, srcs, BcDepth, rowBound)
+      def levels(l: Int): DataFrame =
+        state.where(col("v") === l).select(col("q"), col("id"), col("sg"))
+      val deltas = new Array[DataFrame](BcDepth + 1)
+      deltas(BcDepth) = levels(BcDepth)
+        .select(col("q"), col("id"), col("sg"), lit(0.0).as("dl"))
+      // Every σ/δ frame is bounded by the same |srcs|·|V| rows. The chain
+      // is linear, so a sparser checkpoint cadence would be SEMANTICALLY
+      // safe — but measured SLOWER: every level is referenced 2-3×
+      // downstream (δ contrib, δ join, final union), and at cadence 3 the
+      // re-evaluated join segments cost 13.0 s vs 5.8 s per-level at sf0.1.
+      GraphOps.stateLoop(s, rowBound) { shape =>
+      import shape.hint
+      for (l <- (BcDepth - 1) to 0 by -1) {
+        val succ = deltas(l + 1)
+          .select(col("q").as("wq"), col("id").as("wid"),
+            col("sg").as("wsg"), col("dl").as("wdl"))
+        val contrib = hint(levels(l)).join(se, col("id") === col("src"))
+          .join(hint(succ), col("wq") === col("q") && col("wid") === col("dst"))
+          .groupBy(col("q"), col("id"))
+          .agg(sum(col("sg").cast("double") / col("wsg") * (lit(1.0) + col("wdl")))
+            .as("c"))
+        deltas(l) = levels(l).join(hint(contrib), Seq("q", "id"), "left_outer")
+          .select(col("q"), col("id"), col("sg"),
+            coalesce(col("c"), lit(0.0)).as("dl"))
+          .materialize()
+      }
+      }
+      val bc = (1 to BcDepth).map(deltas(_).select(col("id"), col("dl")))
+        .reduce(_ union _)
+        .groupBy(col("id")).agg(sum(col("dl")).as("b"))
+      verts.join(bc, Seq("id"), "left_outer")
+        .select(col("id"), round(coalesce(col("b"), lit(0.0)), 6).as("betweenness"))
+        .orderBy("id")
+    }
 
   /** g21: sampled-source harmonic closeness centrality — "which parts are
     * near everything" (the centrality face robust to disconnection:
@@ -678,26 +672,19 @@ object GraphQueries {
     * sample size is the knob (Eppstein-Wang: O(log V / ε²) sources), and
     * the per-source cost is the g14 phase-1 BFS — O(depth) shuffles over
     * a frame of |sources|·|V| rows. */
-  def g21Harmonic(s: SparkSession, d: String): DataFrame = {
-    val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
-      .select("src", "dst")
-    val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = se.select(col("src").as("id")).distinct().materialize()
-    val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
-    // r22: reached rows only (unreached pairs were null-valued before
-    // and filtered out right here — bfsLevels simply never carries them)
-    val hc = bfsLevels(se, srcs, BcDepth, levelRowBound(verts, srcs))
-      .where(col("v") > 0)
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_reached"),
-        sum(expr("1000000L div v")).as("harmonic_ppm"))
-    verts.join(hc, Seq("id"), "left_outer")
-      .select(col("id"),
-        coalesce(col("n_reached"), lit(0L)).as("n_reached"),
-        coalesce(col("harmonic_ppm"), lit(0L)).as("harmonic_ppm"))
-      .orderBy("id")
-  }
+  def g21Harmonic(s: SparkSession, d: String): DataFrame =
+    strongTieBfs(s, d) { (se, verts, srcs) =>
+      val hc = bfsLevels(se, srcs, BcDepth, levelRowBound(verts, srcs))
+        .where(col("v") > 0)
+        .groupBy(col("id"))
+        .agg(count(lit(1)).as("n_reached"),
+          sum(expr("1000000L div v")).as("harmonic_ppm"))
+      verts.join(hc, Seq("id"), "left_outer")
+        .select(col("id"),
+          coalesce(col("n_reached"), lit(0L)).as("n_reached"),
+          coalesce(col("harmonic_ppm"), lit(0L)).as("harmonic_ppm"))
+        .orderBy("id")
+    }
 
   /** g23: bounded eccentricity / diameter probe — per sampled source
     * (the g14/g21 source set), the farthest BFS distance within the
@@ -708,22 +695,17 @@ object GraphQueries {
     * aggregate over the already-computed distance table, O(sources·V)
     * like g21; the farthest-vertex pick is the q33 `max(struct)` hash
     * aggregate, no window. */
-  def g23Eccentricity(s: SparkSession, d: String): DataFrame = {
-    val te = partPairsMaterialized(s, d).where(col("weight") >= LinkMinWeight)
-      .select("src", "dst")
-    val se = te.union(te.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = se.select(col("src").as("id")).distinct().materialize()
-    val srcs = verts.orderBy("id").limit(BcSources).select(col("id").as("q"))
-    bfsLevels(se, srcs, BcDepth, levelRowBound(verts, srcs))
-      .where(col("v") > 0)
-      .groupBy(col("q"))
-      .agg(max(col("v")).as("ecc"), count(lit(1)).as("n_reached"),
-        max(struct(col("v"), (-col("id")).as("nid"))).as("am"))
-      .select(col("q").as("source_id"), col("ecc"), col("n_reached"),
-        (-col("am.nid")).as("farthest_id"))
-      .orderBy("source_id")
-  }
+  def g23Eccentricity(s: SparkSession, d: String): DataFrame =
+    strongTieBfs(s, d) { (se, verts, srcs) =>
+      bfsLevels(se, srcs, BcDepth, levelRowBound(verts, srcs))
+        .where(col("v") > 0)
+        .groupBy(col("q"))
+        .agg(max(col("v")).as("ecc"), count(lit(1)).as("n_reached"),
+          max(struct(col("v"), (-col("id")).as("nid"))).as("am"))
+        .select(col("q").as("source_id"), col("ecc"), col("n_reached"),
+          (-col("am.nid")).as("farthest_id"))
+        .orderBy("source_id")
+    }
 
   private val HitsIters = 3
   private val HitsScale = 1000000L

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Both join shapes of [[GraphOps.stateLoop]] — the broadcast shape the
   * default budget picks on small graphs and the shuffle shape a zero
   * budget forces — give the same results, the scope restores AQE, and
-  * GmrRunner leaves the caller's cache alone. */
+  * GmrRunner and the BFS queries release only what they cached. */
 class LoopShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = graft.core.GraftSession.builder("4").getOrCreate()
@@ -31,8 +31,8 @@ class LoopShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def withBudget[T](bytes: Option[Long])(f: => T): T = {
-    bytes.foreach(b => spark.conf.set(GraphOps.StateBroadcastBytesKey, b.toString))
-    try f finally spark.conf.unset(GraphOps.StateBroadcastBytesKey)
+    bytes.foreach(b => spark.conf.set(GraphOps.BroadcastBytesKey, b.toString))
+    try f finally spark.conf.unset(GraphOps.BroadcastBytesKey)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -87,6 +87,16 @@ class LoopShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The shuffle shape keeps AQE on inside the body.
     withBudget(Some(0L)) {
       assert(GraphOps.stateLoop(spark, 100)(_ => spark.conf.get(AqeKey)) === before)
+    }
+  }
+
+  test("the strong-tie BFS queries release their persisted edge view") {
+    val sf = "/root/testdata/sf0.001"
+    spark.catalog.clearCache()
+    for (q <- Seq("g14_betweenness", "g21_harmonic", "g23_eccentricity")) {
+      val out = graft.SparkEntry.queries(q)(spark, sf)
+      assert(nothingCached, s"$q left a frame cached")
+      assert(out.collect().nonEmpty, q)
     }
   }
 

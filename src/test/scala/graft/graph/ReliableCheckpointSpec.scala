@@ -39,6 +39,18 @@ class ReliableCheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("reliable rounds under one dir reuse one checkpoint subdir") {
+    import spark.implicits._
+    withReliable {
+      val base = spark.conf.get(Materialize.DirKey)
+      Materialize(Seq(1L).toDF("x"))
+      val first = spark.sparkContext.getCheckpointDir
+      Materialize(Seq(2L).toDF("x"))
+      assert(spark.sparkContext.getCheckpointDir === first)
+      assert(new java.io.File(base).list().toSeq.length === 1)
+    }
+  }
+
   test("g2 SSSP (BSP runner) and g7 MST under Reliable == Local") {
     val local2 = graft.SparkEntry.queries("g2_sssp")(spark, sf).collect().toSeq
     val local7 = graft.SparkEntry.queries("g7_mst")(spark, sf).collect().toSeq

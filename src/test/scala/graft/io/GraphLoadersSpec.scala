@@ -181,6 +181,60 @@ class GraphLoadersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(isolated.length === 1 && isolated.head.getSeq[Any](2).isEmpty)
   }
 
+  test("assignment writer: broadcast and shuffle ownership joins write the same files") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // Ring 1..6, symmetric; the assignment splits it into {1,2,3} and
+    // {4,5,6}, which the default id-mod-2 owner would not.
+    val ring = (1L to 6L).map(a => (a, a % 6 + 1))
+    val edges = (ring ++ ring.map(_.swap)).map { case (a, b) => (a, b, 1.0) }
+      .toDF("src", "dst", "weight")
+    val g = graft.graph.PropertyGraph(spark.range(1, 7).select(col("id")), edges)
+    val assign = (1L to 6L).map(v => (v, if (v <= 3) 0L else 1L)).toDF("id", "part")
+    def written(budget: Option[Long]): (Seq[String], Seq[String]) = {
+      budget.foreach(b => spark.conf.set(graft.graph.GraphOps.BroadcastBytesKey, b.toString))
+      try {
+        assert(graft.graph.GraphOps.broadcastFits(spark, 32L * 6) === budget.isEmpty)
+        val base = java.nio.file.Files.createTempDirectory("graft-sga").toString + "/ring"
+        GraphLoaders.writeMetisSubgraphs(g, parts = 2, base, Some(assign))
+        val stats = GraphLoaders.partitionStats(spark, base, 2).collect()
+          .map(_.mkString("|")).toSeq
+        val back = (0 until 2).flatMap(p => GraphLoaders.metisSubgraph(spark,
+          s"$base.subgraph.$p").edges.collect().map(_.mkString("|"))).sorted
+        (stats, back)
+      } finally spark.conf.unset(graft.graph.GraphOps.BroadcastBytesKey)
+    }
+    val (bStats, bEdges) = written(None)
+    val (sStats, sEdges) = written(Some(0L))
+    assert(bStats === sStats)
+    assert(bEdges === sEdges)
+    assert(bEdges.length === 12)
+    // Only the two ring edges between 3|4 and 6|1 cross the split, once
+    // in each direction.
+    assert(bStats === Seq("0|3|6|2|33.33", "1|3|6|2|33.33"))
+  }
+
+  test("partstats refuses subgraph files the writer did not produce") {
+    // fmt=11 (edge weights + owners, no vid/vwgt columns) and ncon=2
+    // rows have token counts the one-scan reader would misread silently.
+    val dir = java.nio.file.Files.createTempDirectory("graft-psx")
+    def write(name: String, lines: String*): String = {
+      java.nio.file.Files.write(dir.resolve(name),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      dir.resolve(name).toString
+    }
+    val fmt11 = write("fmt11.subgraph.0", "2 2 11", "2 0 1", "1 0 1")
+    val ex = intercept[IllegalArgumentException] {
+      GraphLoaders.partitionStats(spark, s"$dir/fmt11", 1)
+    }
+    assert(ex.getMessage.contains(fmt11))
+    val ncon2 = write("ncon2.subgraph.0", "2 2 1111 2", "1 1 1 2 0 1", "2 1 1 1 0 1")
+    val ex2 = intercept[IllegalArgumentException] {
+      GraphLoaders.partitionStats(spark, s"$dir/ncon2", 1)
+    }
+    assert(ex2.getMessage.contains(ncon2))
+  }
+
   test("locality assignment cuts strictly fewer edges than id-mod-parts (O8)") {
     // The reference's headline Zoltan capability (gmr.cpp:107-167,
     // "minimize inter-node traffic"): LPA communities balanced into
